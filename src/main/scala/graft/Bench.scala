@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -11,16 +10,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
+    val cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warm-up: run the full suite once untimed (JIT, codegen cache, parquet
@@ -50,9 +41,9 @@ object Bench {
       import org.apache.spark.sql.functions._
       val t0 = System.nanoTime()
       // % bounds the addends so the 200M-term sum can't overflow ANSI long
-      spark.range(0L, 200000000L, 1, cpus.toInt)
+      spark.range(0L, 200000000L, 1, cpus)
         .agg(sum(xxhash64(col("id")) % 1000000)).collect()
-      spark.range(0L, 20000000L, 1, cpus.toInt)
+      spark.range(0L, 20000000L, 1, cpus)
         .groupBy((col("id") % 1000).as("k")).agg(count(lit(1)))
         .agg(sum("count(1)")).collect()
       (System.nanoTime() - t0) / 1e9

@@ -17,12 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BpeTrain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     args.headOption match {
       case Some("bench") => bench(spark)

@@ -6,8 +6,6 @@ import graft.cache.InMemoryDocCache
 import graft.conf.GraftConf
 import graft.exec.FetchedRow
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -32,12 +30,7 @@ object CrawlBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("GRAFT_CRAWL_N", "4096").toInt
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Sketch-aggregate scale-stress (the BloomBench mold for q105/q110-q112):
+/** Sketch-aggregate scale-stress for q105/q110-q112:
   * exact `count(distinct)` must SHUFFLE every distinct (group, token) pair
   * — at 100 TB that shuffle is the job — while `kmv_sketch` carries k
   * longs of map-side-combined state per (task, group) and `cm_sketch` a
@@ -27,12 +26,7 @@ object SketchBench {
     val groups = sys.env.getOrElse("GRAFT_SKETCH_GROUPS", "64").toInt
     val universe = sys.env.getOrElse("GRAFT_SKETCH_UNIVERSE", "10000000").toLong
     val k = 256
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
 

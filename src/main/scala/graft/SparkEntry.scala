@@ -10,10 +10,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Session settings every entry point needs (applied by entry/Verify/Bench;
-    * harmless when already set): events.ts is nanosecond parquet which Spark
-    * only reads as bigint-nanos via the legacy flag; UTC keeps timestamp
-    * rendering engine-independent.
+  /** The one session builder for every `main`: `local[SPARK_GRAFT_CPUS]`
+    * (default 4, the driver contract), shuffle partitions = cores, UI off,
+    * then [[tune]].
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+  }
+
+  /** Session settings every entry point needs (applied by [[session]] and
+    * [[entry]]; harmless when already set): events.ts is nanosecond parquet
+    * which Spark only reads as bigint-nanos via the legacy flag; UTC keeps
+    * timestamp rendering engine-independent.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")

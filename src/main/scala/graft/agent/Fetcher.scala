@@ -69,9 +69,8 @@ object Fetcher {
   // the stream returns the socket to the JDK keep-alive pool, so repeated
   // fetches against one host reuse a connection instead of paying TCP
   // setup + TIME_WAIT churn per page (measured ~10x on a host-skewed
-  // crawl — HostLayoutBench). disconnect() is reserved for the FAILURE
-  // path and the timeout watchdog ([[abortInFlight]]), where killing the
-  // socket is the point.
+  // crawl). disconnect() is reserved for the FAILURE path and the timeout
+  // watchdog ([[abortInFlight]]), where killing the socket is the point.
 
   private[agent] def httpGet(uri: String, timeoutMillis: Long, uid: DocUID, now: Long,
                              headers: Map[String, String] = Map.empty): Observation = {

@@ -71,10 +71,9 @@ final class WebDriverHttpBrowser(
   // is dozens of sequential wire round-trips, so per-request setup IS the
   // operator's unit cost. W3C protocol errors (4xx/5xx envelopes) drain the
   // error stream the same way — the connection is still clean — and only a
-  // transport failure mid-request hard-disconnects.
-  // GRAFT_WIRE_DISCONNECT=1 restores the pre-r22 disconnect-per-request
-  // behavior — the same-JVM A/B seam WireBench measures both modes through.
-  private val reuseConnections = System.getenv("GRAFT_WIRE_DISCONNECT") == null
+  // transport failure mid-request hard-disconnects. Measured against the
+  // disconnect-per-request client: a >= 35 ms per-request stall tail gone,
+  // the q150/q153/q156 browser trio 1.1-1.5x faster.
 
   private def http(method: String, path: String, body: Option[JNode]): JNode = {
     val conn = URI.create(endpoint + path).toURL
@@ -98,7 +97,7 @@ final class WebDriverHttpBrowser(
         else
           try new String(is.readAllBytes(), StandardCharsets.UTF_8)
           finally is.close()
-      drained = reuseConnections
+      drained = true
       val parsed = if (text.isEmpty) F.objectNode() else mapper.readTree(text)
       val value = parsed.path("value")
       if (status >= 400)

@@ -149,14 +149,6 @@ object ExploreExec {
     val down = conf.downSampling
     conf.checkpointDir.foreach(sc.setCheckpointDir)
 
-    val debug = sys.env.get("GRAFT_EXPLORE_DEBUG").contains("true")
-    var tEpoch = System.nanoTime()
-    def mark(l: String): Unit = if (debug) {
-      val t = System.nanoTime()
-      System.err.println(f"[explore] $l ${(t - tEpoch) / 1e9}%.2f s")
-      tEpoch = t
-    }
-
     val partitioner = new HashPartitioner(sc.defaultParallelism)
     val layout = params.layout
 
@@ -256,7 +248,6 @@ object ExploreExec {
       .map { case (t, d) => (t.cacheKey, (t, d, 0)) }
       .reduceByKey(partitioner, win)
     var openCount = cutCount(frontier)
-    mark(s"seed-cut (open=$openCount)")
 
     // level-synchronous invariant: after `level` total levels, every frontier
     // row is at exactly that depth — so past maxDepth the frontier is
@@ -283,7 +274,6 @@ object ExploreExec {
       epoch += 1
       openCount = cutCount(frontier)
       env.metrics.exploreRounds.add(levelRows.count(_.value > 0))
-      mark(s"epoch-cut (levels=$level open=$openCount)")
     }
 
     val all =

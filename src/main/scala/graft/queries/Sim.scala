@@ -844,8 +844,11 @@ object SimQ {
          org.apache.spark.HashPartitioner) = {
     val spark = ids.sparkSession
     import spark.implicits._
+    // a null endpoint never matches a label: the declarative round's inner
+    // join drops such edges, so they are filtered before the typed view
     val edgesRaw = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .as[(Long, Long)].rdd
     // partitioner width derives from the EDGE INPUT's own scan parallelism
     // (guide §2: partitioning from data size, not local cores, the

@@ -377,13 +377,18 @@ class CorpusSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val rnd = new scala.util.Random(4242)
-    (1 to 3).foreach { trial =>
+    (1 to 4).foreach { trial =>
       val n = 30 + rnd.nextInt(30)
       // random directed multigraph: parallel edges kept, some nodes
       // sourceless/sinkless, plus a few self-loops — every structural case
       // the mode rule must tie-break identically on
-      val edges = Seq.fill(4 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .toDF("src", "dst")
+      val drawn = Seq.fill(4 * n)(
+        (Option(rnd.nextInt(n).toLong), Option(rnd.nextInt(n).toLong)))
+      // last trial: edges with a null endpoint, which the declarative
+      // inner join drops and the RDD loop must drop too (not throw)
+      val nullEnds: Seq[(Option[Long], Option[Long])] =
+        if (trial < 4) Nil else Seq((None, Some(0L)), (Some(1L), None), (None, None))
+      val edges = (drawn ++ nullEnds).toDF("src", "dst")
       val ids = (0L until n.toLong).toDF("id")
       val rounds = 1 + rnd.nextInt(4)
       val viaRdd = graft.queries.SimQ.labelPropagate(ids, edges, rounds)

@@ -133,9 +133,12 @@ class DedupSpec extends AnyFunSuite {
       // introduces brand-new nodes (the id space overlaps partially)
       val (base, inc) = all.splitAt(all.size * 2 / 3)
       val baseAsg = Dedup.connectedComponents(edgeDf(base), "src", "dst")
-      val merged = collectAsg(Dedup.mergeComponents(baseAsg, edgeDf(inc)))
+      val mergedRows = Dedup.mergeComponents(baseAsg, edgeDf(inc)).collect()
+      val merged = mergedRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
       val full = ufComponents(all)
       assert(merged == full, s"trial $trial: incremental != full recompute")
+      assert(mergedRows.length == full.size,
+        s"trial $trial: ${mergedRows.length} rows for ${full.size} nodes")
     }
   }
 

@@ -800,6 +800,40 @@ class LlmSpec extends AnyFunSuite {
     assert(unguarded >= 64L * 63L, s"blob must be quadratic unguarded: $unguarded")
     assert(guarded * 3 < unguarded,
       s"guarded pair volume must be bounded: $guarded vs $unguarded")
+
+    // the cluster sizing rule on a generated corpus: k planted group
+    // centres, per-vector jitter that keeps same-group members far below
+    // tau, and one exact twin per 100 ids. With k scaled to n the
+    // largest cell stays bounded as n doubles and exactly the twins are
+    // flagged; with k fixed the within-cell pair volume ~quadruples.
+    def gen(n: Long, k: Long) = spark.range(n).select(col("id").as("vec_id"), expr(
+      s"""transform(sequence(0, 63), j ->
+         |  (pmod(xxhash64((CASE WHEN id % 100 = 99 THEN id - 1 ELSE id END % $k) * 131 + j), 1000) / 1000.0 - 0.5)
+         |  + (pmod(xxhash64((CASE WHEN id % 100 = 99 THEN id - 1 ELSE id END) * 31 + j), 1000) / 1000.0 - 0.5) * 1.4)"""
+        .stripMargin).as("embedding"))
+    def scaled(n: Long): (Long, Long) = {
+      val k = (n / 100).toInt
+      val o = S.semDedup(gen(n, k), "vec_id", "embedding", k = k, iters = 1,
+        tauNum = 49, tauDen = 50).persist()
+      val dups = o.filter(col("is_dup")).count()
+      val maxCell = o.groupBy(col("cluster")).count()
+        .agg(max(col("count"))).collect().head.getLong(0)
+      o.unpersist(false)
+      (dups, maxCell)
+    }
+    val (dupsHalf, cellHalf) = scaled(2000L)
+    val (dupsFull, cellFull) = scaled(4000L)
+    assert(dupsHalf == 20L && dupsFull == 40L, s"planted twins: $dupsHalf / $dupsFull")
+    assert(cellFull <= cellHalf * 2 && cellFull < 400,
+      s"scaled-k cells must stay bounded: $cellHalf -> $cellFull")
+    def fixedKPairs(n: Long): Long = {
+      val gq = S.quantize(gen(n, 8), "embedding").select(col("vec_id"), col("qv"))
+      S.assign(gq, S.fit(gq, "vec_id", 8, 1)).groupBy(col("cluster")).count()
+        .agg(sum(col("count") * (col("count") - 1))).collect().head.getLong(0)
+    }
+    val pairRatio = fixedKPairs(2000L).toDouble / fixedKPairs(1000L)
+    assert(pairRatio > 3.0 && pairRatio < 5.0,
+      s"fixed-k pair volume must ~quadruple: $pairRatio")
   }
 
   test("semdedup: a Lloyd iteration never increases total within-cluster distance (exact ints)") {

@@ -342,6 +342,15 @@ class TextOpsSpec extends AnyFunSuite {
     // 20-token boilerplate span, merged to ONE interval
     assert(got.length == 999 && !got.exists(_._1 == 0L))
     assert(got.forall { case (_, nSpans, nToks) => nSpans == 1L && nToks == 20L })
+    // q53's sampled anchors (p = 4) still catch the span: one removal row
+    // per non-keeper member
+    assert(TextQ.substringRemovalIntervals(docs, k = 12, p = 4).count() == 999L)
+    // pair mode is O(pairs) by result-set identity: c members emit
+    // c(c-1)/2 rows, so doubling the cluster quadruples the table
+    Seq(20L, 40L).foreach { c =>
+      assert(TextQ.substringDedupPairs(docs.filter(col("doc_id") < c), k = 12, p = 1)
+        .count() == c * (c - 1) / 2)
+    }
   }
 
   test("substring scrub: removal lists APPLIED — keeper keeps its span, others lose exactly it") {
@@ -512,7 +521,9 @@ class TextOpsSpec extends AnyFunSuite {
                            // at pos2 with bigram seen -> 0.4*bi
       (5L, "x x c")        // double-unseen context -> 0.16*uni
     ).toDF("doc_id", "text")
-    val got = TextQ.lmQuality(docs).collect()
+    val rows = TextQ.lmQuality(docs).collect()
+    assert(rows.length == 4, "one output row per doc")
+    val got = rows
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     // doc 0: 1000000*2/6=333333 | bi(a,b)2/c1(a)2=1000000 | tri 1/2=500000 |
     //        tri(b,c,a)1/1 | tri(c,a,b)1/1 | tri(a,b,d)1/bi(a,b)2=500000

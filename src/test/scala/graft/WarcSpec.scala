@@ -131,6 +131,25 @@ class WarcSpec extends AnyFunSuite {
     // payload reaches the JSON node tree through the same seam
     val doc = Warc.toDoc(rows(2))
     assert(doc.root.findAll("k").nonEmpty)
+
+    // several per-record-gzipped segments of titled pages: every record
+    // written is parsed, and every parsed record yields its title
+    val many = SparkFixture.scratchDir("warc-many")
+    val (nSeg, perSeg) = (3, 5)
+    (0 until nSeg).foreach { s =>
+      val seg = (0 until perSeg).flatMap { r =>
+        val id = s * perSeg + r
+        Warc.gzMember(response(s"http://h/doc/$id", "text/html; charset=utf-8",
+          bytes(s"<html><head><title>doc $id</title></head><body><p>x</p></body></html>")))
+      }.toArray
+      java.nio.file.Files.write(java.nio.file.Paths.get(many, f"seg_$s%05d.warc.gz"), seg)
+    }
+    val parsed = Warc.read(spark, many).filter("http_status = 200").count()
+    import spark.implicits._
+    val titles = Warc.read(spark, many)
+      .map(r => Warc.toDoc(r).root.findOnly("title").text).collect().sorted.toSeq
+    assert(parsed == nSeg * perSeg)
+    assert(titles == (0 until nSeg * perSeg).map(i => s"doc $i").sorted)
   }
 
   test("offline crawl replay: importToCache seeds the DFS tier; Wget then runs with zero network; wayback picks snapshots") {
