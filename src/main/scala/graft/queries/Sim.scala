@@ -591,12 +591,12 @@ object SimQ {
     * 3, parallel edges kept) — so the DuckDB oracle can unroll the same
     * three iterations as CTEs and hash-match rounded ranks.
     *
-    * Scale shape: each iteration is one shuffle (contribs groupBy dst) +
-    * a left join back onto the node set for dangling targets; ranks and
-    * edges hash-partition on the same id so AQE reuses the exchange. At
-    * 100 TB the edge table is the corpus link graph (q33's explore emits
-    * exactly that), iterations run until delta, and the rank join stays
-    * shuffle-hash — never broadcast (ranks are node-cardinality).
+    * Scale shape: [[graft.scale.PageRank]]'s co-partitioned RDD loop —
+    * ranks and the src-keyed edge index share one partitioner, so each
+    * iteration is ONE exchange (the map-side-combined contribs reduce by
+    * dst) between two narrow zipPartitions. At 100 TB the edge table is the
+    * corpus link graph (q33's explore emits exactly that) and iterations
+    * run until delta; neither ranks nor edges reshuffle.
     */
   def q62Pagerank(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -605,14 +605,14 @@ object SimQ {
         explode(array(
           (col("id") * 7 + 1) % n, (col("id") * 13 + 3) % n,
           (col("id") * 31 + 7) % n)).as("dst"))
-    // no checkpoint here: PageRank.run materializes the outdeg-annotated
-    // edge list itself — a second edge materialization would be pure waste
-    // the general operator ([[graft.scale.PageRank]]): this graph has no
-    // dangling nodes and tol=0, so the run stays PURE LINEAGE — Catalyst
-    // sees all three unrolled iterations and PlanAuditSpec audits their
-    // joins. outdeg is counted from the edge multiset (exactly 3 here);
-    // the oracle divides by the same 3. Both engines compute the teleport
-    // base as IEEE `1.0 - 0.85` (the oracle casts to DOUBLE for parity).
+    // no checkpoint here: PageRank.run persists its own edge index — a
+    // second edge materialization would be pure waste. This graph has no
+    // dangling nodes and tol=0, so after the one setup job the three
+    // iterations stay lineage and run inside the consumer's job (one
+    // exchange each). outdeg is counted from the edge multiset (exactly 3
+    // here); the oracle divides by the same 3. Both engines compute the
+    // teleport base as IEEE `1.0 - 0.85` (the oracle casts to DOUBLE for
+    // parity).
     graft.scale.PageRank.run(ids, edges, damping = 0.85, tol = 0.0, maxIter = 3)
       .ranks
       .select(col("id").as("doc_id"), round(col("pr"), 4).as("pr"))
@@ -630,10 +630,11 @@ object SimQ {
     * teleport base is IEEE `1.0 - 0.85` on both engines.
     *
     * Scale note: the dangling mass is ONE double per iteration collected
-    * at the driver (the PrefixSum/Bpe bounded-aggregate pattern); ranks
-    * are materialized per iteration through typed-RDD checkpoints whose
-    * predecessors release immediately — O(1) executor storage however
-    * many iterations run.
+    * at the driver (the PrefixSum/Bpe bounded-aggregate pattern), riding
+    * the aggregate that fills that iteration's localCheckpoint; each
+    * checkpoint's predecessor releases immediately — O(1) executor storage
+    * however many iterations run. The last iteration's mass is never
+    * needed, so it stays lineage for the consumer's job.
     */
   def q64PagerankDangling(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -658,12 +659,13 @@ object SimQ {
     * with no FP-order sensitivity — same oracle-design doctrine as the
     * canonical-state sketches.
     *
-    * Scale shape: each half-step is ONE shuffle (contribs groupBy the
-    * opposite endpoint) + a left join back onto the node set, identical to
-    * [[graft.scale.PageRank]]'s iteration; scores are node-cardinality so
-    * the join stays shuffle-hash, never broadcast. Unbounded iteration
-    * counts would checkpoint like PageRank's tol path; the fixed-k query
-    * form stays pure lineage for Catalyst (and PlanAuditSpec) to see.
+    * Scale shape: declarative — each half-step is a contribs join, a
+    * groupBy of the opposite endpoint and a left join back onto the node
+    * set, several exchanges where [[graft.scale.PageRank]]'s
+    * [[graft.scale.CoPartitioned]] loop pays one. Scores are
+    * node-cardinality so the joins stay shuffle-hash, never broadcast. The
+    * fixed-k query form stays pure lineage for Catalyst (and
+    * PlanAuditSpec) to see.
     */
   def hits(ids: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"hits: iters >= 1, got $iters")
@@ -672,7 +674,7 @@ object SimQ {
     var auth: DataFrame = null
     // every join carries hint("shuffle_hash"): iteration outputs are
     // stat-less to Catalyst, and a size-blind SMJ would add a sort per
-    // half-step (the PageRank.run rule — see its scaladoc)
+    // half-step
     for (_ <- 1 to iters) {
       auth = ids.join(
           e.join(hub.hint("shuffle_hash"), e("src") === hub("id"))
@@ -731,12 +733,12 @@ object SimQ {
     * collapse into one community in a handful of rounds. At sf0.01 the
     * 500-node graph settles into 68 communities.
     *
-    * Scale shape (r22, the explicit-partitioner RDD loop — [[lpRoundRdd]]):
+    * Scale shape (the [[graft.scale.CoPartitioned]] loop — [[lpRoundRdd]]):
     * labels and the src-keyed edge index are co-partitioned ONCE, so each
     * round's contribution join and relabel join are narrow zipPartitions
     * and the round's single exchange is the map-side-combined per-dst
-    * label count — edges never reshuffle after setup (the declarative
-    * formulation re-shuffled them every round). Labels stay (id, lbl)
+    * label count — edges never reshuffle after setup (a declarative
+    * formulation re-shuffles them every round). Labels stay (id, lbl)
     * pairs — no driver state, no collect; for unbounded rounds the
     * PageRank.run checkpoint cadence applies unchanged.
     */
@@ -750,60 +752,34 @@ object SimQ {
     labelPropagate(ids, edges, 3).orderBy(col("id"))
   }
 
-  /** One synchronous label-propagation round: relabel every node with the
-    * MODE of its in-neighbors' labels (count desc, label asc — fully
-    * deterministic; no in-edges → keep). Output carries the OLD label as
-    * `prev` so convergence loops can count changes without a second join;
-    * the declarative path prunes it. Shared by [[labelPropagate]] and
-    * [[labelPropagateConverge]] so the relabel rule can never fork.
-    */
-  private[graft] def lpRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
-    val counts = edges
-      .join(labels.select(col("id").as("l_id"), col("lbl")).hint("shuffle_hash"),
-        col("src") === col("l_id"))
-      .groupBy(col("dst").as("c_id"), col("lbl").as("nl"))
-      .agg(count(lit(1)).as("c"))
-    val mode = counts
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("c_id")).orderBy(col("c").desc, col("nl"))))
-      .filter(col("rn") === 1)
-      .select(col("c_id"), col("nl"))
-    labels.join(mode.hint("shuffle_hash"), col("id") === col("c_id"), "left")
-      .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"),
-        col("lbl").as("prev"))
-  }
-
-  /** One RDD-level label-propagation round under an EXPLICIT partitioner
-    * (r22, optimization guide §2.4/§8 — VERDICT item 6): labels and the
-    * src-keyed edge index share `part`, so the contribution join and the
-    * relabel join are NARROW `zipPartitions` (neither labels nor edges
-    * reshuffle, ever) and the round's ONE exchange is the per-dst
-    * label-count combine — map-side combined, so it carries per-partition
-    * (dst, label)→count partials, not edges. The declarative [[lpRound]]
-    * paid 3-4 exchanges per round for the same facts (edges⋈labels, the
-    * count groupBy, the mode window, the relabel join); at graph scale the
-    * edge re-shuffle per round is the dominant cost this removes.
+  /** One label-propagation round on the [[graft.scale.CoPartitioned]]
+    * layout: labels and the src-keyed edge index share `g.part`, so the
+    * contribution join and the relabel join are NARROW `zipPartitions`
+    * (neither labels nor edges reshuffle, ever) and the round's ONE
+    * exchange is the per-dst label-count combine — map-side combined, so
+    * it carries per-partition (dst, label)→count partials, not edges. A
+    * declarative round pays 3-4 exchanges for the same facts (edges⋈labels,
+    * the count groupBy, the mode window, the relabel join).
     *
-    * Result-identical to [[lpRound]] BY ARITHMETIC, not by plan: counts
-    * are exact longs (order-independent merges) and the mode tie-break
-    * ((count desc, label asc) — here `c > bestC || (c == bestC && l <
-    * bestL)` over any iteration order) is the same deterministic rule.
-    * CorpusSpec pins RDD-vs-declarative parity on planted and formula
-    * graphs.
+    * The relabel rule: the MODE of the in-neighbors' labels, (count desc,
+    * label asc) — here `c > bestC || (c == bestC && l < bestL)` over any
+    * iteration order, with exact long counts, so the result is
+    * order-independent. An edge with a null dst relabels nothing.
+    * CorpusSpec pins parity with a declarative DataFrame round on random
+    * multigraphs.
     *
     * Output values: (id, (newLabel, oldLabel)) — the old label rides along
     * so the convergence loop's changed-count needs no second join.
     */
   private def lpRoundRdd(
-      labels: org.apache.spark.rdd.RDD[(Long, Long)],
-      edgesBySrc: org.apache.spark.rdd.RDD[(Long, Long)],
-      part: org.apache.spark.Partitioner)
+      labels: org.apache.spark.rdd.RDD[(Long, Long)], g: graft.scale.CoPartitioned)
       : org.apache.spark.rdd.RDD[(Long, (Long, Long))] = {
-    val contrib = labels.zipPartitions(edgesBySrc) { (lit, eit) =>
+    val contrib = labels.zipPartitions(g.edgesBySrc) { (lit, eit) =>
       val m = new scala.collection.mutable.LongMap[Long]()
       lit.foreach { case (id, l) => m.update(id, l) }
       eit.flatMap { case (src, dst) =>
-        if (m.contains(src)) Iterator.single((dst, m(src))) else Iterator.empty
+        if (dst != null && m.contains(src)) Iterator.single((dst.longValue, m(src)))
+        else Iterator.empty
       }
     }
     val mode = contrib.combineByKey(
@@ -817,7 +793,7 @@ object SimQ {
        b: scala.collection.mutable.LongMap[Long]) => {
         b.foreach { case (l, c) => a.update(l, a.getOrElse(l, 0L) + c) }; a
       },
-      part)
+      g.part)
       .mapValues { m =>
         var bestL = Long.MaxValue
         var bestC = 0L
@@ -826,64 +802,35 @@ object SimQ {
         }
         bestL
       }
-    labels.zipPartitions(mode, preservesPartitioning = true) { (lit, mit) =>
+    labels.zipPartitions(mode) { (lit, mit) =>
       val m = new scala.collection.mutable.LongMap[Long]()
       mit.foreach { case (id, l) => m.update(id, l) }
       lit.map { case (id, old) => (id, (m.getOrElse(id, old), old)) }
     }
   }
 
-  /** (src-keyed edge index, initial self-labels) co-partitioned for
-    * [[lpRoundRdd]]. The edge index is persisted — every round re-reads it
-    * from executor blocks; its storage frees via the ContextCleaner when
-    * the result drops out of scope (the in-query norm).
-    */
-  private def lpSetup(ids: DataFrame, edges: DataFrame)
-      : (org.apache.spark.rdd.RDD[(Long, Long)],
-         org.apache.spark.rdd.RDD[(Long, Long)],
-         org.apache.spark.HashPartitioner) = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    // a null endpoint never matches a label: the declarative round's inner
-    // join drops such edges, so they are filtered before the typed view
-    val edgesRaw = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .as[(Long, Long)].rdd
-    // partitioner width derives from the EDGE INPUT's own scan parallelism
-    // (guide §2: partitioning from data size, not local cores, the
-    // ExploreExec rule): a narrow test graph stays 1-few partitions — no
-    // 32-empty-task rounds — while a production edge table whose scan
-    // shards clamps to defaultParallelism exactly as a shuffle would.
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        edgesRaw.getNumPartitions)))
-    val edgesBySrc = edgesRaw.partitionBy(part)
-    edgesBySrc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labels0 = ids.select(col("id").cast("long")).as[Long].rdd
-      .map(id => (id, id)).partitionBy(part)
-    (edgesBySrc, labels0, part)
-  }
-
   /** Core of [[q90LabelProp]] over any (id) / (src, dst) frames — the spec
     * hand-verifies rounds on planted community graphs. Fixed round count
-    * over the RDD loop ([[lpRoundRdd]] — one exchange per round, edges
-    * never reshuffle; r22, replacing the declarative unroll whose every
-    * round paid 3-4 exchanges); every `checkpointEvery`-th round truncates
-    * lineage so plan depth stays bounded over long runs.
+    * over [[lpRoundRdd]] (one exchange per round, edges never reshuffle);
+    * every `checkpointEvery`-th round truncates lineage so plan depth
+    * stays bounded over long runs. No job runs here: every round executes
+    * inside the consumer's job, reading the edge index's shuffle output,
+    * so the persisted index is released before returning — repeated runs
+    * leave no block-manager RDD behind (CorpusSpec's storage census).
     */
   def labelPropagate(ids: DataFrame, edges: DataFrame, rounds: Int,
                      checkpointEvery: Int = 8): DataFrame = {
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
     val spark = ids.sparkSession
-    val (edgesBySrc, labels0, part) = lpSetup(ids, edges)
-    var labels = labels0
+    val g = graft.scale.CoPartitioned(ids, edges)
+    var labels = g.ids.map(id => (id, id))
     var r = 0
     while (r < rounds) {
       r += 1
-      labels = lpRoundRdd(labels, edgesBySrc, part).mapValues(_._1)
+      labels = lpRoundRdd(labels, g).mapValues(_._1)
       if (r % checkpointEvery == 0 && r < rounds) labels.localCheckpoint()
     }
+    g.release()
     val enc2 = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
     spark.createDataset(labels)(enc2).toDF("id", "lbl")
@@ -907,10 +854,10 @@ object SimQ {
     * no label (or `maxRounds`), the [[graft.scale.PageRank]] tol-path
     * applied to community detection. Each round needs a per-round scalar
     * (the changed count — one Long to the driver, the bounded-aggregate
-    * class), so labels materialize every round through a typed-RDD
-    * localCheckpoint and the PREVIOUS round's blocks release immediately:
-    * O(1) executor storage and flat lineage across any number of rounds,
-    * exactly PageRank's needScalars branch. The changed count IS the
+    * class), so labels materialize every round through a localCheckpoint
+    * and the PREVIOUS round's blocks release immediately: O(1) executor
+    * storage and flat lineage across any number of rounds, exactly
+    * PageRank's scalar-needing iterations. The changed count IS the
     * materializing action — one `aggregate` both populates the
     * checkpoint blocks and returns the exact scalar (an action result,
     * exactly-once), so each round launches ONE job, not a count() plus a
@@ -923,21 +870,14 @@ object SimQ {
                              maxRounds: Int): LabelPropResult = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val spark = ids.sparkSession
-    // the RDD loop (r22): one exchange per round (the per-dst count
-    // combine), labels and edges co-partitioned so both joins are narrow —
-    // see lpRoundRdd. The census contract is unchanged: each round's
-    // changed-count rides the SAME rdd.aggregate that populates the
-    // round's localCheckpoint blocks — exactly ONE job per round
-    // (CorpusSpec's SparkListener census), and the previous round's
-    // blocks release immediately (O(1) executor storage).
-    val (edgesBySrc, labels0, part) = lpSetup(ids, edges)
-    var labels = labels0
+    val g = graft.scale.CoPartitioned(ids, edges)
+    var labels = g.ids.map(id => (id, id))
     var prevCp: org.apache.spark.rdd.RDD[_] = null
     var r = 0
     var changed = Long.MaxValue
     while (r < maxRounds && changed != 0L) {
       r += 1
-      val next = lpRoundRdd(labels, edgesBySrc, part)
+      val next = lpRoundRdd(labels, g)
       next.localCheckpoint()
       changed = next.aggregate(0L)(
         (acc, t) => if (t._2._1 != t._2._2) acc + 1L else acc, _ + _)
@@ -945,7 +885,7 @@ object SimQ {
       prevCp = next
       labels = next.mapValues(_._1)
     }
-    edgesBySrc.unpersist(blocking = false) // labels is checkpoint-backed now
+    g.release() // labels is checkpoint-backed now
     val enc2 = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
     new LabelPropResult(spark.createDataset(labels)(enc2).toDF("id", "lbl"),

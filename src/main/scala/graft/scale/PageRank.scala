@@ -2,7 +2,8 @@ package graft.scale
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.functions._
+
+import scala.collection.mutable.LongMap
 
 /** General PageRank over an arbitrary edge list — the real operator behind
   * q62's closed-form gate (reference: the crawl-graph link-authority signal;
@@ -15,50 +16,46 @@ import org.apache.spark.sql.functions._
   * is redistributed uniformly instead of leaking (the standard fix; without
   * it total mass decays every iteration on any graph with sinks). Parallel
   * edges are kept as a multiset (a page linking twice contributes twice) —
-  * the q62 convention.
+  * the q62 convention. A node is dangling when no edge has it as src; an
+  * edge whose src is not a node holds no rank and contributes nothing.
   *
-  * Scale shape: outdeg is joined onto the edge list ONCE before the loop
-  * (edge-scale localCheckpoint, released on return); each iteration is one
-  * shuffle-hash contribs join + groupBy(dst) + a left join back onto the
-  * node set — ranks are node-cardinality so neither side ever broadcasts,
-  * and every iterative join carries `hint("shuffle_hash")` because
-  * checkpointed inputs have no stats (the q53/q62 discipline — the static
-  * planner would silently fall back to sort-merge).
+  * Scale shape: the [[CoPartitioned]] loop. Setup keys the node vector
+  * `(id, (pr, prev, outdeg))` by the edge index's partitioner, counting
+  * out-degree once per src inside its partition. Each iteration is a
+  * narrow `zipPartitions` that emits `pr/outdeg` along every out-edge, ONE
+  * map-side-combined `reduceByKey` exchange onto the node partitioner, and
+  * a narrow `zipPartitions` that writes the new ranks (the old rank rides
+  * along as `prev`). Neither ranks nor edges ever reshuffle.
   *
-  * Checkpointing: when the loop needs per-iteration scalars (dangling mass
-  * or a convergence delta), ranks are eagerly materialized each iteration
-  * through a typed-RDD localCheckpoint and the PREVIOUS iteration's blocks
-  * are released immediately — O(1) executor storage across any number of
-  * iterations (the ExploreExec epoch-hygiene discipline). The scalars ride
-  * the materializing `rdd.aggregate` itself — the dangling flag is a
-  * column of the rank vector and the previous ranks a lineage column — so
-  * every scalar-needing regime launches exactly ONE Spark job per
-  * iteration (census-pinned); the FIRST iteration's dangling mass is
-  * `nDangling · 1.0` by construction and needs no job at all. When no scalars
-  * are needed (no dangling nodes, tol = 0), iterations stay PURE LINEAGE
-  * and only every `checkpointEvery`-th iteration truncates — so a short
-  * fixed-iteration run like q62 remains fully declarative (Catalyst sees
-  * the whole multi-iteration plan; PlanAuditSpec audits its joins). The
-  * EDGE index is a plain DataFrame localCheckpoint (a typed-RDD round
-  * trip would pay an encoder pass over the whole edge table just to be
-  * releasable); its blocks free via the ContextCleaner once the Result is
-  * unreferenced — only the node-scale rank checkpoints, the thing that
-  * actually accumulates over a long run, get the eager-release treatment.
+  * Checkpointing: when an iteration's scalars are needed (the L1 delta for
+  * the tol stop, or the dangling mass the next iteration redistributes),
+  * its node vector is localCheckpointed and ONE `aggregate` both fills the
+  * blocks and returns the scalars; the previous checkpoint is released at
+  * once — O(1) executor storage over any number of iterations. The setup
+  * node vector is materialised the same way by the one job that counts
+  * nodes and dangling nodes, so the first iteration's dangling mass,
+  * `nDangling · 1.0`, needs no job. When no scalar is needed (no dangling
+  * nodes, tol = 0 — q62, or q64's last iteration), iterations stay lineage
+  * and only every `checkpointEvery`-th one truncates. The edge index is
+  * released as soon as the final ranks no longer read it; otherwise
+  * [[Result.release]] does.
   *
-  * Driver-side state: one Double per iteration (dangling mass / delta) —
-  * the bounded-aggregate pattern of PrefixSum/Bpe, never row data.
+  * Driver-side state: one Double pair per iteration (delta, dangling
+  * mass) — the bounded-aggregate pattern of PrefixSum/Bpe, never row data.
   *
-  * @param nodes distinct node ids, column `id` (castable to long)
-  * @param edges directed links, columns `src`, `dst`; dst ids outside
-  *              `nodes` receive contributions but don't re-emit (they are
-  *              dropped from the rank vector — nodes defines the universe)
+  * @param nodes distinct node ids, column `id` (castable to long); a null
+  *              id is dropped
+  * @param edges directed links, columns `src`, `dst`. An edge with a null
+  *              src is dropped. A dst outside `nodes`, or null, counts
+  *              toward its src's out-degree and its share leaks (nodes
+  *              defines the universe)
   * @param tol   L1 convergence threshold on Σ|pr' - pr|; 0 = run exactly
   *              `maxIter` iterations
   */
 object PageRank {
 
-  /** @param ranks (id, pr) — materialized when the run checkpointed,
-    *              otherwise pure lineage over the inputs
+  /** @param ranks (id, pr) — backed by the final checkpoint when the last
+    *              iteration materialised, otherwise lineage over it
     * @param iterations iterations actually run
     * @param delta final Σ|pr' - pr| (NaN when tol = 0 — never computed)
     */
@@ -66,8 +63,9 @@ object PageRank {
       val ranks: DataFrame, val iterations: Int, val delta: Double,
       handles: Seq[RDD[_]]) {
     /** Releases executor storage still held for `ranks` (the final
-      * checkpoint blocks, if any). Call after consuming `ranks`; the
-      * DataFrame must not be re-executed afterwards.
+      * checkpoint blocks, and the edge index if `ranks` still reads it).
+      * Call after consuming `ranks`; the DataFrame must not be re-executed
+      * afterwards.
       */
     def release(): Unit = handles.foreach(_.unpersist(blocking = false))
   }
@@ -78,141 +76,69 @@ object PageRank {
     require(damping > 0 && damping < 1, s"damping must be in (0,1): $damping")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
-    val spark = nodes.sparkSession
-    val ids = nodes.select(col("id").cast("long").as("id"))
-    val n = ids.count()
+    val g = CoPartitioned(nodes, edges)
+    // every edge of a src sits in its src's partition, so out-degree is a
+    // partition-local count (null-dst edges included)
+    val v0 = g.ids.zipPartitions(g.edgesBySrc) { (iit, eit) =>
+      val deg = new LongMap[Int]()
+      eit.foreach { case (s, _) => deg.update(s, deg.getOrElse(s, 0) + 1) }
+      iit.map(id => (id, (1.0, 1.0, deg.getOrElse(id, 0))))
+    }
+    v0.localCheckpoint()
+    val (n, nDangling) = v0.aggregate((0L, 0L))(
+      (acc, t) => (acc._1 + 1, if (t._2._3 == 0) acc._2 + 1 else acc._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    if (n == 0) { v0.unpersist(blocking = false); g.release() }
     require(n > 0, "pagerank needs a non-empty node set")
     val base = 1.0 - damping
 
-    val tupleEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-    val tuple3Enc = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaDouble)
-    val tupleDEnc = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaBoolean)
-    val tuple4Enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble,
-      Encoders.scalaDouble, Encoders.scalaBoolean)
-
-    // out-degree rides the edge list once; the loop never recounts it.
-    // Plain DataFrame localCheckpoint (no typed-RDD round trip — an
-    // encoder pass over the EDGE table is the dominant setup cost at
-    // graph scale): the blocks are freed by the ContextCleaner when the
-    // Result drops out of scope, the accepted in-query norm. Only the
-    // node-scale per-iteration rank checkpoints use the releasable
-    // typed-RDD form — those are what accumulate over a long run.
-    val deg = edges.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("outdeg"))
-    val withDeg = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .join(deg.hint("shuffle_hash"), Seq("src"))
-      .localCheckpoint() // edge-scale, materialized once, read per iteration
-    // dangling count without a second edge pass: emitters = distinct srcs
-    // (assumes src ⊆ nodes — the crawl-graph invariant; a foreign src
-    // would contribute rank it never held)
-    val nDangling = n - withDeg.select(col("src")).distinct().count()
-    // when dangling nodes exist, the per-node flag rides the RANK VECTOR
-    // itself (built once, node-scale, checkpointed): the next iteration's
-    // dangling mass then falls out of THIS iteration's materializing
-    // aggregate — one Spark job per iteration, not a mass job plus a
-    // materialization (the labelPropagateConverge discipline)
-    val idsD =
-      if (nDangling == 0) null
-      else ids.join(
-          withDeg.select(col("src").as("id")).distinct()
-            .withColumn("em", lit(true)).hint("shuffle_hash"),
-          Seq("id"), "left_outer")
-        .select(col("id"), (!coalesce(col("em"), lit(false))).as("dang"))
-        .localCheckpoint()
-    // scalars force a materialized rank vector every iteration; without
-    // them the loop stays declarative and only truncates on the cadence
-    val needScalars = nDangling > 0 || tol > 0
-
-    var ranks = ids.select(col("id"), lit(1.0).as("pr"))
+    var ranks: RDD[(Long, (Double, Double, Int))] = v0
+    var held: RDD[_] = v0 // the latest materialised node vector
+    var materialised = true
     // initial ranks are EXACTLY 1.0 each, so the first iteration's mass
-    // needs no job: Σ over dangling nodes of 1.0 is exact in any order
+    // is exact in any summation order
     var dm = nDangling.toDouble
-    var prevCp: RDD[_] = null
     var iter = 0
     var delta = Double.NaN
     var converged = false
     while (iter < maxIter && !converged) {
       iter += 1
-      val contribs = withDeg
-        .join(ranks.hint("shuffle_hash"), withDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      val inflowTotal = coalesce(col("inflow"), lit(0.0)) +
-        (if (nDangling == 0) lit(0.0) else lit(dm / n))
-      val pr2 = (lit(base) + lit(damping) * inflowTotal).as("pr")
-      var next = (if (nDangling == 0) ids else idsD)
-        .join(contribs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id") +: pr2 +:
-          (if (nDangling == 0) Seq.empty else Seq(col("dang"))): _*)
-      if (needScalars || iter % checkpointEvery == 0) {
-        // typed-RDD checkpoint: materializes + truncates lineage AND hands
-        // us the RDD so the previous epoch's blocks release NOW. In every
-        // scalar-needing regime the scalars (convergence delta and/or next
-        // dangling mass) ride the SAME rdd.aggregate that populates the
-        // checkpoint blocks — exactly one job per iteration.
-        if (tol > 0 && nDangling > 0) {
-          val rdd4 = next.as("b")
-            .join(ranks.as("a").hint("shuffle_hash"), col("a.id") === col("b.id"))
-            .select(col("b.id"), col("b.pr"), col("a.pr").as("prev"), col("b.dang"))
-            .as[(Long, Double, Double, Boolean)](tuple4Enc).rdd
-          rdd4.localCheckpoint()
-          val (d, m) = rdd4.aggregate((0.0, 0.0))(
-            (acc, t) => (acc._1 + math.abs(t._2 - t._3),
-              acc._2 + (if (t._4) t._2 else 0.0)),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-          delta = d; dm = m
-          converged = delta <= tol
-          next = spark.createDataset(rdd4)(tuple4Enc)
-            .toDF("id", "pr", "prev", "dang").drop("prev")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd4
-        } else if (tol > 0) {
-          // the delta scalar IS the materializing action: the previous
-          // ranks ride the lineage as a third column (the same
-          // shuffle-hash join the old separate delta job ran — moved
-          // inside, so the iteration launches ONE job instead of a
-          // count() plus a delta pass), and one rdd.aggregate both
-          // populates the checkpoint blocks and returns Σ|pr' − pr|
-          val rdd3 = next.as("b")
-            .join(ranks.as("a").hint("shuffle_hash"), col("a.id") === col("b.id"))
-            .select(col("b.id"), col("b.pr"), col("a.pr").as("prev"))
-            .as[(Long, Double, Double)](tuple3Enc).rdd
-          rdd3.localCheckpoint()
-          delta = rdd3.aggregate(0.0)(
-            (acc, t) => acc + math.abs(t._2 - t._3), _ + _)
-          converged = delta <= tol
-          next = spark.createDataset(rdd3)(tuple3Enc)
-            .toDF("id", "pr", "prev").drop("prev")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd3
-        } else if (nDangling > 0) {
-          // next iteration's dangling mass rides the materialization
-          val rddD = next.as[(Long, Double, Boolean)](tupleDEnc).rdd
-          rddD.localCheckpoint()
-          dm = rddD.aggregate(0.0)(
-            (acc, t) => acc + (if (t._3) t._2 else 0.0), _ + _)
-          next = spark.createDataset(rddD)(tupleDEnc).toDF("id", "pr", "dang")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rddD
-        } else {
-          val rdd = next.as[(Long, Double)](tupleEnc).rdd
-          rdd.localCheckpoint()
-          rdd.count()
-          next = spark.createDataset(rdd)(tupleEnc).toDF("id", "pr")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd
+      val inflow = ranks.zipPartitions(g.edgesBySrc) { (vit, eit) =>
+        val share = new LongMap[Double]()
+        vit.foreach { case (id, (pr, _, deg)) => if (deg > 0) share.update(id, pr / deg) }
+        eit.flatMap { case (s, d) =>
+          if (d != null && share.contains(s)) Iterator.single((d.longValue, share(s)))
+          else Iterator.empty
         }
+      }.reduceByKey(g.part, _ + _)
+      val teleport = dm / n
+      val next = ranks.zipPartitions(inflow) { (vit, iit) =>
+        val in = new LongMap[Double]()
+        iit.foreach { case (id, c) => in.update(id, c) }
+        vit.map { case (id, (pr, _, deg)) =>
+          (id, (base + damping * (in.getOrElse(id, 0.0) + teleport), pr, deg))
+        }
+      }
+      materialised = tol > 0 || (nDangling > 0 && iter < maxIter) ||
+        iter % checkpointEvery == 0
+      if (materialised) {
+        next.localCheckpoint()
+        val (d, m) = next.aggregate((0.0, 0.0))(
+          (acc, t) => (acc._1 + math.abs(t._2._1 - t._2._2),
+            if (t._2._3 == 0) acc._2 + t._2._1 else acc._2),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+        if (tol > 0) { delta = d; converged = d <= tol }
+        dm = m
+        held.unpersist(blocking = false)
+        held = next
       }
       ranks = next
     }
-    // rank-checkpoint blocks hand over to release(); the edge index (a
-    // DataFrame localCheckpoint) frees via the ContextCleaner once the
-    // Result is unreferenced. Callers see the (id, pr) contract — the
-    // dangling flag is loop plumbing.
-    val outRanks = if (nDangling == 0) ranks else ranks.select(col("id"), col("pr"))
-    new Result(outRanks, iter, delta, Option(prevCp).toSeq)
+    val handles =
+      if (materialised) { g.release(); Seq(held) } else Seq(held, g.edgesBySrc)
+    val out = ranks.map { case (id, (pr, _, _)) => (id, pr) }
+    new Result(nodes.sparkSession.createDataset(out)(
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)).toDF("id", "pr"),
+      iter, delta, handles)
   }
 }

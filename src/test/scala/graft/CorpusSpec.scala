@@ -4,6 +4,7 @@ import graft.llm.Bloom
 import graft.queries.CorpusQ
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -323,6 +324,27 @@ class CorpusSpec extends AnyFunSuite {
 
   // ------------------------------------------------- label propagation
 
+  /** The parity oracle for SimQ's RDD label-propagation loop: one
+    * synchronous round as a declarative DataFrame plan. Every node takes
+    * the MODE of its in-neighbors' labels (count desc, label asc); a node
+    * with no in-edges keeps its label. Edges with a null endpoint match
+    * nothing (inner join on src, relabel join on dst).
+    */
+  private def lpRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
+    val counts = edges
+      .join(labels.select(col("id").as("l_id"), col("lbl")).hint("shuffle_hash"),
+        col("src") === col("l_id"))
+      .groupBy(col("dst").as("c_id"), col("lbl").as("nl"))
+      .agg(count(lit(1)).as("c"))
+    val mode = counts
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("c_id")).orderBy(col("c").desc, col("nl"))))
+      .filter(col("rn") === 1)
+      .select(col("c_id"), col("nl"))
+    labels.join(mode.hint("shuffle_hash"), col("id") === col("c_id"), "left")
+      .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
+  }
+
   test("label propagation: two planted cliques converge to their min ids; ties break low") {
     val spark0 = spark
     import spark0.implicits._
@@ -395,11 +417,30 @@ class CorpusSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val viaPlan = (1 to rounds)
         .foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
-          graft.queries.SimQ.lpRound(edges)(l).drop("prev")
+          lpRound(edges)(l)
         }
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(viaRdd == viaPlan,
         s"trial $trial (n=$n, rounds=$rounds): RDD loop diverged from the declarative rule")
+    }
+  }
+
+  test("label propagation: repeated q90 runs leave no persisted RDD behind (storage census)") {
+    val spark0 = spark
+    import spark0.implicits._
+    val sc = spark.sparkContext
+    // q90 reads only documents.doc_id
+    val dir = scratchDir("q90-census")
+    (0L until 100L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val q90 = graft.queries.SimQ.all("q90_label_prop")
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 3).foreach { run =>
+      assert(q90(spark, dir).collect().length == 100)
+      // the census: RDDs still marked persistent, and RDDs holding blocks
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      val cached = sc.getRDDStorageInfo.map(_.id).toSet -- before
+      assert(leaked.isEmpty && cached.isEmpty,
+        s"run $run left RDDs in the block manager: persistent=$leaked cached=$cached")
     }
   }
 

@@ -2,38 +2,60 @@ package graft
 
 import graft.scale.PageRank
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 /** The general PageRank operator ([[graft.scale.PageRank]]) vs driver-side
   * reference simulations: the q62 closed form (uniform outdeg 3, no
   * dangling), a variable-outdeg graph WITH dangling nodes (mass
-  * redistribution), convergence stopping, and checkpoint-cadence
-  * equivalence.
+  * redistribution), convergence stopping, checkpoint-cadence equivalence,
+  * random-graph parity, and the job and stage census of the loop.
   */
 class PageRankSpec extends AnyFunSuite {
 
   import SparkFixture._
 
   /** Reference: scaled PageRank with uniform dangling redistribution —
-    * pr'(v) = (1-d) + d*(Σ pr(u)/outdeg(u) + danglingMass/n). Multiset
-    * edges (parallel edges contribute once per copy).
+    * pr'(v) = (1-d) + d*(Σ pr(u)/outdeg(u) + danglingMass/n) over the
+    * node universe `nodes`. Multiset edges (parallel edges contribute once
+    * per copy). None is a null endpoint: a null-src edge is dropped; a
+    * dst outside `nodes` (None included) counts toward its src's outdeg
+    * and its share leaks; a src outside `nodes` holds no rank and
+    * contributes nothing. A node is dangling iff no edge has it as src.
+    * With tol > 0 the run stops at the first iteration whose L1 delta is
+    * <= tol. Returns (ranks, iterations, last delta).
     */
-  private def simulate(n: Int, edges: Seq[(Long, Long)], d: Double,
-                       iters: Int): Map[Long, Double] = {
-    val outdeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toDouble }
-    var pr = (0L until n.toLong).map(_ -> 1.0).toMap
-    for (_ <- 1 to iters) {
+  private def reference(nodes: Seq[Long], edges: Seq[(Option[Long], Option[Long])],
+                        d: Double, maxIter: Int,
+                        tol: Double = 0.0): (Map[Long, Double], Int, Double) = {
+    val kept = edges.collect { case (Some(s), dst) => (s, dst) }
+    val outdeg = kept.groupBy(_._1).map { case (s, es) => s -> es.size.toDouble }
+    val n = nodes.size
+    var pr = nodes.map(_ -> 1.0).toMap
+    var iter = 0
+    var delta = Double.NaN
+    while (iter < maxIter && !(tol > 0 && delta <= tol)) {
+      iter += 1
       val dm = pr.collect { case (v, p) if !outdeg.contains(v) => p }.sum
-      val inflow = edges.groupBy(_._2).map { case (dst, es) =>
-        dst -> es.map { case (s, _) => pr(s) / outdeg(s) }.sum
-      }
-      pr = pr.map { case (v, _) =>
+      val inflow = kept.collect { case (s, Some(dst)) if pr.contains(s) => (dst, pr(s) / outdeg(s)) }
+        .groupBy(_._1).map { case (dst, cs) => dst -> cs.map(_._2).sum }
+      val next = pr.map { case (v, _) =>
         v -> ((1 - d) + d * (inflow.getOrElse(v, 0.0) + dm / n))
       }
+      delta = next.map { case (v, p) => math.abs(p - pr(v)) }.sum
+      pr = next
     }
-    pr
+    (pr, iter, delta)
   }
+
+  private def simulate(n: Int, edges: Seq[(Long, Long)], d: Double,
+                       iters: Int): Map[Long, Double] =
+    reference((0L until n.toLong), edges.map { case (s, t) => (Some(s), Some(t)) },
+      d, iters)._1
 
   private def q62Edges(n: Int): Seq[(Long, Long)] =
     (0L until n.toLong).flatMap(i =>
@@ -110,6 +132,73 @@ class PageRankSpec extends AnyFunSuite {
     got.values.foreach(v => assert(math.abs(v - 1.0) < 1e-4))
   }
 
+  test("a src outside the node set contributes nothing and hides no dangling node") {
+    val spark0 = spark
+    import spark0.implicits._
+    // node 1 is dangling; 7 -> 0 is an edge from a src that is not a node.
+    // Counting dangling nodes as n - distinct(src) reads 2 - 2 = 0 here,
+    // switches redistribution off and leaks node 1's mass every iteration
+    val nodes = Seq(0L, 1L).toDF("id")
+    val e = Seq((0L, 1L), (7L, 0L)).toDF("src", "dst")
+    val res = PageRank.run(nodes, e, maxIter = 3)
+    val got = res.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    res.release()
+    assertClose(got, simulate(2, Seq((0L, 1L)), 0.85, 3))
+    assert(math.abs(got.values.sum - 2.0) < 1e-9, s"mass leaked: ${got.values.sum}")
+  }
+
+  test("random graphs: the RDD loop matches the reference at 1e-9 and at round(4)") {
+    val spark0 = spark
+    import spark0.implicits._
+    def r4(v: Double) = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+    val rnd = new scala.util.Random(62)
+    (1 to 12).foreach { trial =>
+      // node ids: a random subset of 0 until 2n, so edges also hit ids
+      // outside the node set (as src and as dst)
+      val n = 10 + rnd.nextInt(40)
+      val nodeIds = rnd.shuffle((0L until 2L * n).toList).take(n)
+      val universe = 2 * n
+      // every 4th node emits nothing (dangling), every 5th takes nothing
+      // in (sink); parallel edges and self-loops come from the draws
+      val emitters = nodeIds.zipWithIndex.filter(_._2 % 4 != 0).map(_._1)
+      val targets = (0L until universe.toLong).filterNot(nodeIds.zipWithIndex
+        .collect { case (v, i) if i % 5 == 0 => v }.toSet)
+      val drawn = Seq.fill(3 * n) {
+        val s = if (rnd.nextInt(10) == 0) rnd.nextInt(universe).toLong
+                else emitters(rnd.nextInt(emitters.size))
+        val t = if (rnd.nextInt(8) == 0) s else targets(rnd.nextInt(targets.size))
+        (Option(s), Option(t))
+      }
+      val doubled = drawn.take(n / 3)
+      // every third trial: null endpoints (null src dropped; null dst
+      // counts toward outdeg and leaks)
+      val nulls: Seq[(Option[Long], Option[Long])] =
+        if (trial % 3 != 0) Nil
+        else Seq((None, Some(nodeIds.head)), (Some(emitters.head), None), (None, None),
+          (Some(nodeIds(1)), None))
+      val edges = drawn ++ doubled ++ nulls
+      val d = if (trial % 2 == 0) 0.5 else 0.85
+      val tol = if (trial % 4 == 1) 0.05 * n else 0.0
+      val maxIter = 1 + rnd.nextInt(8)
+      val every = Seq(1, 2, 3, 100)(rnd.nextInt(4))
+      val (exp, expIter, expDelta) = reference(nodeIds, edges, d, maxIter, tol)
+
+      val res = PageRank.run(nodeIds.toDF("id"), edges.toDF("src", "dst"), damping = d,
+        tol = tol, maxIter = maxIter, checkpointEvery = every)
+      val got = res.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val ctx = s"trial $trial (n=$n, d=$d, tol=$tol, maxIter=$maxIter, every=$every)"
+      assert(res.iterations == expIter, s"$ctx: stopped at ${res.iterations}, expected $expIter")
+      if (tol > 0) assert(math.abs(res.delta - expDelta) < 1e-9, s"$ctx: delta ${res.delta} vs $expDelta")
+      else assert(res.delta.isNaN, s"$ctx: delta computed with tol = 0")
+      res.release()
+      assert(got.keySet == exp.keySet, s"$ctx: node sets differ")
+      got.foreach { case (k, v) =>
+        assert(math.abs(v - exp(k)) < 1e-9, s"$ctx: node $k got $v expected ${exp(k)}")
+        assert(r4(v) == r4(exp(k)), s"$ctx: node $k rounds to ${r4(v)}, expected ${r4(exp(k))}")
+      }
+    }
+  }
+
   test("checkpoint cadence does not change values; pure-lineage == per-iteration") {
     val n = 30
     val edges = q62Edges(n)
@@ -117,7 +206,7 @@ class PageRankSpec extends AnyFunSuite {
     // cadence 2: checkpoints at 2,4,6, pure lineage tail at 7
     val (cadenced, _, _) = runOp(n, edges, maxIter = 7, checkpointEvery = 2)
     assertClose(cadenced, exp)
-    // cadence 100: the whole run is one declarative plan
+    // cadence 100: all seven iterations stay lineage
     val (pure, _, _) = runOp(n, edges, maxIter = 7, checkpointEvery = 100)
     assertClose(pure, exp)
   }
@@ -138,11 +227,12 @@ class PageRankSpec extends AnyFunSuite {
       assert(res.iterations < 50 && res.delta <= 1e-6)
       Thread.sleep(1000) // listener bus drains async
       val jobs = sc.statusTracker.getJobIdsForGroup("pr-census").length
-      // fixed setup = 3 jobs (node count, edge-index checkpoint, dangling
-      // probe); after that the delta aggregate IS each iteration's only job
-      assert(jobs == 3 + res.iterations,
+      // fixed setup = 1 job (node and dangling counts, filling the edge
+      // index and the node vector); after that the delta aggregate IS each
+      // iteration's only job
+      assert(jobs == 1 + res.iterations,
         s"tol iteration must launch exactly one job: $jobs jobs for " +
-          s"${res.iterations} iterations (+3 setup)")
+          s"${res.iterations} iterations (+1 setup)")
       res.release()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
@@ -165,13 +255,14 @@ class PageRankSpec extends AnyFunSuite {
       sc.clearJobGroup()
       Thread.sleep(1000) // listener bus drains async
       val jobs = sc.statusTracker.getJobIdsForGroup("pr-dang-census").length
-      // fixed setup = 4 jobs (node count, edge-index checkpoint, dangling
-      // probe, flagged-id checkpoint) + the final consuming count; after
-      // that each iteration's mass aggregate IS its only job — iteration
-      // 1's mass is nDangling * 1.0 by construction, zero jobs
-      assert(jobs == 4 + 4 + 1,
+      // fixed setup = 1 job (node and dangling counts) + the final
+      // consuming count; iterations 1-3 each launch one job, the aggregate
+      // whose dangling mass the next iteration redistributes (iteration
+      // 1's own mass is nDangling * 1.0 by construction). No iteration
+      // needs the last one's mass, so it runs inside the consuming job
+      assert(jobs == 1 + 3 + 1,
         s"dangling iteration must launch exactly one job: $jobs jobs for " +
-          s"${res.iterations} iterations (+4 setup, +1 consume)")
+          s"${res.iterations} iterations (+1 setup, +1 consume, last in the consume)")
       res.release()
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
@@ -183,10 +274,60 @@ class PageRankSpec extends AnyFunSuite {
     val nodes = (0L until n.toLong).toDF("id")
     val e = q62Edges(n).toDF("src", "dst")
     val res = PageRank.run(nodes, e, maxIter = 3, checkpointEvery = 100)
+    // the rank/edge join is a hash-partitioned zipPartitions; nothing in
+    // the plan that serves `ranks` may sort-merge
     val plan = res.ranks.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"),
       s"stat-less iterative join fell back to SMJ:\n$plan")
+    assert(res.ranks.count() == n)
     res.release()
+  }
+
+  test("pure-lineage mode: exactly one shuffle per iteration (SparkListener stage census)") {
+    val spark0 = spark
+    import spark0.implicits._
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // shuffle-map stages that RAN (a reused shuffle's stage is skipped
+    // and never completes) in jobs of the group. A job's result stage is
+    // created after all its parents, so it has the job's highest stage id;
+    // every other stage of the job is a shuffle-map stage
+    val mapStages = ConcurrentHashMap.newKeySet[Int]()
+    val completed = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            Option(js.properties.getProperty("spark.jobGroup.id")).exists(_.startsWith("pr-stages")))
+          js.stageIds.filter(_ != js.stageIds.max).foreach(mapStages.add)
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        completed.add(sc.stageInfo.stageId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val n = 50
+      val nodes = (0L until n.toLong).toDF("id")
+      val e = q62Edges(n).toDF("src", "dst")
+      def shuffles(iters: Int): Int = {
+        mapStages.clear(); completed.clear()
+        sc.setJobGroup(s"pr-stages-$iters", "pr-stages", interruptOnCancel = false)
+        val res = PageRank.run(nodes, e, maxIter = iters, checkpointEvery = 100)
+        res.ranks.collect()
+        sc.clearJobGroup()
+        Thread.sleep(1000) // listener bus drains async
+        res.release()
+        mapStages.asScala.count(completed.contains)
+      }
+      // setup shuffles the node ids and the edge index onto the shared
+      // partitioner once; after that each iteration is ONE exchange
+      val s3 = shuffles(3)
+      val s6 = shuffles(6)
+      assert(s3 == 2 + 3, s"3 iterations ran $s3 shuffle stages (expected 2 setup + 3)")
+      assert(s6 - s3 == 3, s"3 more iterations added ${s6 - s3} shuffle stages, not 3")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("HITS: star graph hand-computed — path counts exact, alternating auth/hub steps") {
